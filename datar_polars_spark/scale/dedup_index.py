@@ -29,13 +29,20 @@ Layout under ``<path>/`` (all parquet, all narrow on purpose):
   the sidecar's parameters — signatures are only comparable when both
   sides hash the same shingles with the same permutation family.
 
+Batch evaluation: ``match_against_index`` and ``dedup_against_index``
+checkpoint the batch once at entry, and every leg (the exact join, the
+fuzzy signing, the survivor anti-join, the append) reads that
+checkpoint — the caller's lazy plan (in a curation chain, the whole
+upstream pipeline) runs once per call, not once per Spark action.
+
 Read-after-append hazard: a frame computed against the store captures
 the store's file listing in its plan, and composing it with a
 POST-append read of the same path in one query lets Spark's
 scan/exchange reuse alias the fresh read back to the stale listing.
-``dedup_against_index(append=True)`` therefore materializes the
-survivors (bounded internal persist) before appending; if you call
-``dedup_index_append`` yourself, write or persist any frame you
+``dedup_against_index(append=True)`` therefore checkpoints the
+survivors before appending: the returned frame holds materialized
+rows, with no store read left in its plan. If you call
+``dedup_index_append`` yourself, write or checkpoint any frame you
 derived from the pre-append store before composing it with
 post-append reads.
 
@@ -351,12 +358,21 @@ def dedup_index_append(
     (existence is what drops a future dup) and avoids rewriting the
     store; rebuild when the accumulated duplication is worth
     reclaiming."""
-    _DROPPED_PAIRS["dedup_index_append"] = []
     td = ensure_tibble(batch)
     meta = _load_meta(td.df.sparkSession, path)
     tname = _name_of(text) if text is not None else meta["text_col"]
     idn = _name_of(id_col) if id_col is not None else meta["id_col"]
-    got_t = td.df.schema[idn].dataType.simpleString()
+    _append(td.df.select(*td.columns), path, meta, tname, idn, stamp)
+
+
+def _append(
+    df: DataFrame, path: str, meta: dict, tname: str, idn: str,
+    stamp: int | str,
+) -> None:
+    """dedup_index_append against an already-loaded sidecar — the
+    dtype and watermark guards, then the store writes."""
+    _DROPPED_PAIRS["dedup_index_append"] = []
+    got_t = df.schema[idn].dataType.simpleString()
     if got_t != meta["id_type"]:
         # appending a different physical type would poison the stores:
         # the explicit-schema reads (and parquet itself) cannot merge
@@ -378,7 +394,7 @@ def dedup_index_append(
             f"arrival; stamp the increment at or past the watermark"
         )
     _build_stores(
-        td.df.select(*td.columns), tname, idn, meta, path, "append",
+        df, tname, idn, meta, path, "append",
         probe_par=False, op="dedup_index_append", stamp=stamp,
     )
 
@@ -480,49 +496,87 @@ def match_against_index(
     Batch rows with NULL ids are exempt (never matched, never
     dropped); an exactly-matching batch doc appears only in the
     'exact' rows (it is excluded from fuzzy candidate generation)."""
+    td = ensure_tibble(batch)
+    meta = _load_meta(td.df.sparkSession, path)
+    eff = _check_match(meta, path, verify, min_stamp)
+    tname = _name_of(text) if text is not None else meta["text_col"]
+    idn = _name_of(id_col) if id_col is not None else meta["id_col"]
+    return Tibble(_match(
+        _materialize(td), path, meta, eff, tname, idn,
+        threshold=threshold, max_bucket=max_bucket, verify=verify,
+        log_dropped=log_dropped,
+    ))
+
+
+def _materialize(td: Tibble) -> DataFrame:
+    """The batch's visible columns, evaluated ONCE. In a curation
+    chain the batch is a lazy plan over the whole upstream pipeline
+    (extract, quality, minhash_dedup, ...), and every Spark action that
+    reads a lazy frame re-runs that plan: the partition probe (AQE
+    finalizes the plan to count its partitions), the exact and fuzzy
+    legs, the survivor anti-join and the append each read the batch.
+    One eager checkpoint feeds them all — and, unlike a persist, it
+    truncates the lineage, so no cached plan is re-evaluated when an
+    append writes the store path (see the survivors checkpoint in
+    dedup_against_index)."""
+    return td.df.select(*td.columns).transform(reliable_checkpoint, eager=True)
+
+
+def _check_match(meta: dict, path: str, verify: str, min_stamp) -> int:
+    """Validate the match arguments against the sidecar BEFORE the
+    batch is materialized; returns the effective retention cutoff
+    (caller min_stamp or the sidecar watermark), which every store
+    scan enforces as a pushed-down stamp predicate."""
+    from .fp_index import retention_cutoff
+
     if verify not in ("estimate", "exact"):
         raise ValueError(f"verify must be 'estimate' or 'exact', got {verify!r}")
-    _DROPPED_PAIRS["match_against_index"] = []
-    td = ensure_tibble(batch)
-    spark = td.df.sparkSession
-    meta = _load_meta(spark, path)
-    from .fp_index import _prune_expired, retention_cutoff
-
-    # retention cutoff (caller min_stamp or the sidecar watermark):
-    # enforced on every store scan as a pushed-down stamp predicate
     eff = retention_cutoff(
         meta, min_stamp, "match_against_index", path, "dedup_index_build"
     )
-    _st = ", stamp bigint" if eff > 0 else ""
     if verify == "exact" and not meta["store_grams"]:
         raise ValueError(
             "verify='exact' needs the gram store; rebuild the index "
             "with dedup_index_build(..., store_grams=True)"
         )
-    tname = _name_of(text) if text is not None else meta["text_col"]
-    idn = _name_of(id_col) if id_col is not None else meta["id_col"]
+    return eff
+
+
+def _match(
+    mat: DataFrame, path: str, meta: dict, eff: int, tname: str, idn: str,
+    *, threshold: float, max_bucket: int, verify: str, log_dropped: bool,
+) -> DataFrame:
+    """The match_against_index body over a materialized batch (see
+    _materialize) and a loaded sidecar: every leg reads ``mat``, so
+    nothing here re-runs the caller's plan."""
+    _DROPPED_PAIRS["match_against_index"] = []
+    spark = mat.sparkSession
+    from .fp_index import _prune_expired
+
+    _st = ", stamp bigint" if eff > 0 else ""
     jcol = "jaccard" if verify == "exact" else "jaccard_est"
 
     from ..plans.cache import register_internal_cache
     from .dedup import _ensure_parallelism
 
-    # persist the normalized batch: it feeds the exact leg, the
-    # fuzzy-survivor derivation, and the signing/gram passes — and the
-    # count() both materializes the persist and gives the EXACT batch
-    # cardinality for the broadcast decision (runtime truth, not an
-    # estimate)
-    base = register_internal_cache(
-        _ensure_parallelism(
-            td.df.select(*td.columns)
-            .filter(F.col(idn).isNotNull())
-            .select(
-                F.col(idn).alias("id_a"),
-                F.col(tname).alias("__text__"),
-                _fingerprint(F.col(tname)).alias("fp"),
-            )
-        ).persist()
+    batch = mat.filter(F.col(idn).isNotNull())
+    # EXACT batch cardinality for the broadcast decision (runtime
+    # truth, not an estimate) — a count over the checkpointed rows,
+    # taken before the parallelism repartition so it shuffles nothing
+    n_batch = batch.count()
+    # the normalized batch feeds the exact leg, the fuzzy-survivor
+    # derivation and the signing/gram passes; it is not persisted —
+    # each consumer re-derives it from the checkpoint with a narrow
+    # projection (plus, for a small-partition batch, one batch-sized
+    # round-robin shuffle). The partition probe on a checkpointed
+    # frame launches no job.
+    base = _ensure_parallelism(
+        batch.select(
+            F.col(idn).alias("id_a"),
+            F.col(tname).alias("__text__"),
+            _fingerprint(F.col(tname)).alias("fp"),
+        )
     )
-    n_batch = base.count()
     # below the bound, PIN the batch side broadcast so the
     # corpus-scale stores never shuffle for a small batch (the r5
     # finding: AQE does not reliably demote to broadcast)
@@ -645,7 +699,7 @@ def match_against_index(
         ).select(F.col("id").alias("id_b"), F.col("grams").alias("g_b"))
         fuzzy = (
             cand.select("id_a", "id_b")
-            .join(grams_a, on="id_a")
+            .join(_pin(grams_a), on="id_a")
             .join(grams_b, on="id_b")
             .withColumn(
                 jcol,
@@ -672,9 +726,9 @@ def match_against_index(
         ) / F.lit(meta["num_perm"])
         fuzzy = (
             cand.join(
-                sig_a.select(
+                _pin(sig_a.select(
                     F.col("id").alias("id_a"), F.col("sig").alias("sig_a")
-                ),
+                )),
                 on="id_a",
             )
             .join(store_sigs, on="id_b")
@@ -682,7 +736,7 @@ def match_against_index(
             .filter(F.col(jcol) >= threshold)
             .select("id_a", "id_b", F.lit("minhash").alias("via"), jcol)
         )
-    return Tibble(exact.unionByName(fuzzy))
+    return exact.unionByName(fuzzy)
 
 
 def dedup_against_index(
@@ -718,15 +772,20 @@ def dedup_against_index(
     (future exact dups of them are caught) but no MinHash postings —
     no identity to post under (family contract, same as build)."""
     td = ensure_tibble(batch)
-    hits = match_against_index(
-        td, path, text, id_col,
-        threshold=threshold, max_bucket=max_bucket,
-        verify=verify, log_dropped=log_dropped, min_stamp=min_stamp,
-    )
+    # ONE sidecar read and ONE batch materialization feed the match,
+    # the survivor anti-join and the append (see _materialize)
     meta = _load_meta(td.df.sparkSession, path)
+    eff = _check_match(meta, path, verify, min_stamp)
+    tname = _name_of(text) if text is not None else meta["text_col"]
     idn = _name_of(id_col) if id_col is not None else meta["id_col"]
-    surv = td.df.select(*td.columns).join(
-        hits.df.select(F.col("id_a").alias(idn)).dropDuplicates(),
+    mat = _materialize(td)
+    hits = _match(
+        mat, path, meta, eff, tname, idn,
+        threshold=threshold, max_bucket=max_bucket, verify=verify,
+        log_dropped=log_dropped,
+    )
+    surv = mat.join(
+        hits.select(F.col("id_a").alias(idn)).dropDuplicates(),
         on=idn, how="left_anti",
     )
     if append:
@@ -747,11 +806,8 @@ def dedup_against_index(
         # executor storage — the frame the caller is about to use
         # anyway.
         surv = surv.transform(reliable_checkpoint, eager=True)
-    out = Tibble(surv, groups=td.group_vars, levels=td.levels)
-    if append:
-        tname = _name_of(text) if text is not None else meta["text_col"]
-        dedup_index_append(out, path, tname, idn, stamp=stamp)
-    return out
+        _append(surv, path, meta, tname, idn, stamp)
+    return Tibble(surv, groups=td.group_vars, levels=td.levels)
 
 
 def dedup_index_expire(spark, path: str, before: int) -> dict:

@@ -613,14 +613,19 @@ def fp_dedup_against_index(
     (materialized first — the family's read-after-append contract),
     stamped with ``stamp``."""
     td = ensure_tibble(batch)
+    meta = load_meta(fam, td.df.sparkSession, path)
+    # the batch's plan runs ONCE: the match's hash pass and the
+    # survivor anti-join below both read this checkpoint. The match's
+    # own hashed-batch persist stays — the Arrow decode runs above the
+    # checkpoint, and that persist keeps it to one pass.
+    mat = td.df.select(*td.columns).transform(reliable_checkpoint, eager=True)
     hits, hashed_batch = fp_match_with_base(
-        fam, td, path, content, id_col,
+        fam, Tibble(mat), path, content, id_col,
         max_hamming=max_hamming, max_bucket=max_bucket, strict=strict,
         min_stamp=min_stamp,
     )
-    meta = load_meta(fam, td.df.sparkSession, path)
     idn = _name_of(id_col) if id_col is not None else meta["id_col"]
-    surv = td.df.select(*td.columns).join(
+    surv = mat.join(
         hits.df.select(F.col("id_a").alias(idn)).dropDuplicates(),
         on=idn, how="left_anti",
     )

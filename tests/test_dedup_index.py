@@ -504,3 +504,55 @@ def test_build_scans_corpus_once(spark, tmp_path):
         Tibble(frame), f.text, f.doc_id, str(tmp_path / "idx")
     )
     assert acc.value == n, acc.value  # once per row, not once per store
+
+
+@pytest.mark.parametrize(
+    "op,append",
+    [("match", False), ("dedup", False), ("dedup", True)],
+    ids=["match", "dedup", "dedup_append"],
+)
+def test_dedup_against_index_evaluates_batch_once(
+    spark, tmp_path, corpus, op, append
+):
+    """The batch's lazy plan (in a curation chain: the whole
+    minhash_dedup pipeline) must run ONCE per call — the partition
+    probe, the exact/fuzzy legs, the survivor anti-join and the append
+    all read one materialization of it. Counted with the mapInPandas
+    accumulator of test_build_scans_corpus_once; the groupBy above the
+    counted node puts a shuffle under the batch, so an AQE partition
+    probe on the lazy plan would execute it too."""
+    import pyspark.sql.functions as F
+
+    path = str(tmp_path / "didx")
+    dedup_index_build(corpus, f.text, f.doc_id, path)
+    acc = spark.sparkContext.accumulator(0)
+    texts = [BASE, NEAR, FAR, OTHER] + [
+        f"fresh document number {i} about rivers and valleys" for i in range(9)
+    ]
+    n = len(texts)
+    src = spark.createDataFrame(
+        [(100 + i, t) for i, t in enumerate(texts)],
+        "doc_id long, text string",
+    )
+
+    def counted(it):
+        for pdf in it:
+            acc.add(len(pdf))
+            yield pdf
+
+    frame = (
+        src.mapInPandas(counted, "doc_id long, text string")
+        .groupBy("doc_id")
+        .agg(F.first("text").alias("text"))
+    )
+    if op == "match":
+        hits = match_against_index(Tibble(frame), path, threshold=0.5)
+        got = {r.id_a for r in hits.df.collect()}
+        assert {100, 101, 102} <= got
+    else:
+        surv = dedup_against_index(
+            Tibble(frame), path, threshold=0.5, append=append
+        ).collect()
+        assert 100 not in set(surv["doc_id"].tolist())
+        assert len(surv) == n - 3
+    assert acc.value == n, acc.value  # once per row, not once per leg

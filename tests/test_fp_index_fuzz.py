@@ -188,3 +188,42 @@ def test_build_hashes_each_row_once(spark, tmp_path):
         max_hamming=4, max_bucket=1000, strict=False, mode="overwrite",
     )
     assert acc.value == n, acc.value  # once per row, not once per store
+
+
+@pytest.mark.parametrize("append", [False, True])
+def test_dedup_evaluates_batch_once(spark, tmp_path, append):
+    """fp_dedup_against_index must run the batch's lazy plan ONCE: the
+    match's hash pass, the survivor anti-join and the append all read
+    one materialization. Same mapInPandas accumulator as
+    test_dedup_index.test_dedup_against_index_evaluates_batch_once; the
+    groupBy above the counted node puts a shuffle under the batch."""
+    path = str(tmp_path / "idx")
+    fp_index_build(
+        FAM, _frame(spark, [(1, 0), (2, (1 << 40) - 1)]),
+        "content", "item_id", path,
+        max_hamming=4, max_bucket=1000, strict=False, mode="overwrite",
+    )
+    acc = spark.sparkContext.accumulator(0)
+    rows = [(10, 0), (11, 1), (12, (1 << 40) - 2)] + [
+        (20 + i, (i + 3) * 0x1234567) for i in range(10)
+    ]
+    n = len(rows)
+
+    def counted(it):
+        for pdf in it:
+            acc.add(len(pdf))
+            yield pdf
+
+    frame = (
+        _frame(spark, rows).df
+        .mapInPandas(counted, "item_id long, content long")
+        .groupBy("item_id")
+        .agg(F.first("content").alias("content"))
+    )
+    surv = fp_dedup_against_index(
+        FAM, Tibble(frame), path, "content", "item_id",
+        max_hamming=None, max_bucket=1000, strict=False, append=append,
+    )
+    kept = {r.item_id for r in surv.df.collect()}
+    assert kept == {20 + i for i in range(10)}  # 10-12 match 1 or 2
+    assert acc.value == n, acc.value  # once per row, not once per leg

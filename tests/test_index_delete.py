@@ -235,16 +235,24 @@ def test_dedup_index_small_batch_store_joins_broadcast(tmp_path, spark):
     legs — the r5 finding that AQE does not reliably demote applies)
     and the fuzzy-survivor derivation uses the broadcastable
     matched-fp set, so NO corpus-scale store shuffles: zero
-    SortMergeJoin in the final plan."""
+    SortMergeJoin in the final plan. Both verify modes: the batch side
+    of the verify join (signatures / gram sets) is pinned too — left to
+    AQE, the candidate x batch-signature join plans as a
+    SortMergeJoin."""
     path = str(tmp_path / "didx")
     dedup_index_build(
         tibble(spark, doc_id=[1, 2], text=[BASE, FAR]),
-        f.text, f.doc_id, path,
+        f.text, f.doc_id, path, store_grams=True,
     )
     probe = tibble(spark, doc_id=[10, 11], text=[BASE, NEAR])
-    plan = _final_plan(match_against_index(probe, path, threshold=0.5).df)
-    assert plan.count("SortMergeJoin") == 0
-    assert plan.count("BroadcastHashJoin") > 0
+    for verify in ("estimate", "exact"):
+        plan = _final_plan(
+            match_against_index(
+                probe, path, threshold=0.5, verify=verify
+            ).df
+        )
+        assert plan.count("SortMergeJoin") == 0, verify
+        assert plan.count("BroadcastHashJoin") > 0, verify
 
 
 def test_semantic_index_small_batch_store_joins_broadcast(tmp_path, spark):
